@@ -61,20 +61,21 @@ def _grid_text(rng: np.random.Generator, ncols: int, nrows: int) -> tuple[str, i
 def grid_batch(
     seed: int,
     index: int,
-    files: int = 6,
-    shape: tuple[int, int] = (60, 40),
+    files: int,
+    shape: tuple[int, int],
     plant_every_defect: bool = False,
 ) -> GridBatch:
     """Arrival ``index`` of the stream for ``seed``.
 
-    Batch ``i`` covers UTC hours ``2i .. 2i+2`` with a file in both end
-    hours, so its last hour is also the first hour of batch ``i+1``: every
-    batch adds a second file to one partition, which the next compaction
-    folds.  Several files share an hour within a batch
-    (distinct base names).  About 2% of files are malformed (bad header,
-    bad filename or empty); ``plant_every_defect`` adds one of each kind,
-    so every run has quarantine traffic to check.  The number of good
-    files is fixed, so every seed asks for the same amount of work."""
+    Batch ``i`` covers UTC hours ``2i .. 2i+2``, its files spread evenly
+    over the three hours (several files share an hour, with distinct base
+    names), so its last hour is also the first hour of batch ``i+1``:
+    every batch adds a second file to one partition, which the next
+    compaction folds.  About 2% of files are malformed (bad header, bad
+    filename or empty); ``plant_every_defect`` adds one of each kind, so
+    every run has quarantine traffic to check.  The number of good files
+    and their hours are fixed, so every seed asks for the same amount of
+    work, in the ops and in the compactions."""
     rng = np.random.default_rng([seed, index])
     ncols, nrows = shape
     batch = GridBatch(files={})
@@ -86,7 +87,7 @@ def grid_batch(
         if rng.random() < MALFORMED_SHARE
     ]
     for i in range(n + len(defects)):
-        offset = {0: 0, 1: 2}.get(i, int(rng.integers(0, 3)))
+        offset = (0, 2, 1)[i % 3]
         utc = _T0 + timedelta(hours=2 * index + offset)
         kind = RADIATION_TYPES[int(rng.integers(0, len(RADIATION_TYPES)))]
         stamp = utc.strftime("%Y%m%d_%H00")
@@ -124,8 +125,14 @@ class Arrival:
     kind: dict[int, str]
 
 
+#: words per doc: the 10th to 90th percentile of the repo's documents table
+#: (19 and 90 words at sf0.01 and sf0.1)
+WORDS = (19, 90)
+
+
 def _doc(rng: np.random.Generator) -> list[str]:
-    return [VOCAB[j] for j in rng.integers(0, len(VOCAB), size=int(rng.integers(12, 80)))]
+    n = int(rng.integers(WORDS[0], WORDS[1] + 1))
+    return [VOCAB[j] for j in rng.integers(0, len(VOCAB), size=n)]
 
 
 def _near(rng: np.random.Generator, words: list[str]) -> list[str]:

@@ -1,7 +1,8 @@
 """Self-tests of the benchmark at smoke size.
 
-Run from the repository root:  python3 -m pytest perfbench -q -p no:cacheprovider
-(about ten minutes: every case starts its own Spark driver).
+Run from the repository root:  python3 -m pytest perfbench -q -m "" -p no:cacheprovider
+(about ten minutes: every case starts its own Spark driver).  They are
+marked slow, so the default ``-m "not slow ..."`` of pytest.ini skips them.
 """
 
 from __future__ import annotations
@@ -13,6 +14,8 @@ import sys
 from pathlib import Path
 
 import pytest
+
+pytestmark = pytest.mark.slow
 
 ROOT = Path(__file__).resolve().parent.parent
 SPEC = json.loads((ROOT / "BENCHMARK.json").read_text())

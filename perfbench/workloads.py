@@ -2,12 +2,14 @@
 engine's public functions only.
 
 A workload builds its starting state (``setup``, then ``warmup``: one
-primary op), then yields its closed-loop steps one cycle at a time
+primary op and its maintenance), then yields its closed-loop steps one cycle at a time
 (``cycle``).  Each step is ``(kind, call)``: ``kind`` is ``"op"`` for the
 primary operation and ``"maint"`` for the maintenance that follows every
 op, and ``call()`` performs exactly the engine work that is timed and
 returns the number of user items it handled.  Maintenance after every op
 gives each run several maintenance samples, so their median is steady.
+Every op of a cycle is of one size class, so the cycle's slowest op is a
+tail sample, not the largest op of a mixed cycle.
 Input generation happens in the generator between steps, outside the
 timed calls.  ``check`` compares the final state with the generator's
 ground truth through DuckDB, an engine independent of Spark.
@@ -16,7 +18,6 @@ ground truth through DuckDB, an engine independent of Spark.
 from __future__ import annotations
 
 import json
-import math
 import os
 from collections import Counter
 
@@ -43,12 +44,17 @@ class GridIngest:
     its predecessor."""
 
     name = "grid_ingest"
-    CYCLE = 3
+    CYCLE = 2
     COLS = ["Longitude", "Latitude"]
+    #: 50x40-cell files, the grid of bench.py's flagship decode corpus
+    #: (~1,800 points per file at ~10% NODATA); files per batch are chosen
+    #: for run time
+    SHAPE = (50, 40)
+    FILES_PER_BATCH = 6
 
     def __init__(self, seed: int, base: str, smoke: bool = False) -> None:
         self.seed, self.base = seed, base
-        self.files_per_batch, self.shape = (2, (20, 10)) if smoke else (6, (60, 40))
+        self.files_per_batch, self.shape = (2, (20, 10)) if smoke else (self.FILES_PER_BATCH, self.SHAPE)
         self.next_batch = 0
         self.truth: Counter = Counter()
         self.radiation_sum: Counter = Counter()
@@ -57,7 +63,9 @@ class GridIngest:
         #: rows ingest_batch reported, per accepted batch
         self.rows_written: list[int] = []
         os.makedirs(base)
-        self._pending = self._stage_batch(plant_every_defect=True)
+        #: the initial ingest (every defect planted) and the warm-up batch
+        self._initial = self._stage_batch(plant_every_defect=True)
+        self._warm = self._stage_batch()
 
     def _stage_batch(self, plant_every_defect: bool = False) -> inputs.GridBatch:
         batch = inputs.grid_batch(
@@ -73,6 +81,8 @@ class GridIngest:
         self.ws = workspace.init_workspace(spark, f"file://{self.base}/ws")
         db = workspace.create_database(spark, "perfbench")
         self.fq = workspace.register_table(spark, db, "radiation", self.ws)
+        self._initial.write(self._local(self.ws.in_dir))
+        self._ingest(self._initial)
 
     def _ingest(self, batch: inputs.GridBatch) -> int:
         from etl_bom_radiation_spark import ingest
@@ -99,8 +109,12 @@ class GridIngest:
         return 0
 
     def warmup(self) -> None:
-        self._pending.write(self._local(self.ws.in_dir))
-        self._ingest(self._pending)
+        """A second batch and its compaction: unlike the initial batch, it
+        meets an existing partition and manifest, as every loop batch does,
+        and the first loop batch then meets a compacted table."""
+        self._warm.write(self._local(self.ws.in_dir))
+        self._ingest(self._warm)
+        self._compact()
 
     def cycle(self):
         for _ in range(self.CYCLE):
@@ -196,19 +210,27 @@ class CorpusAdmit:
     with ``admit_batch(..., max_docs=M, epoch=i)``, each followed by
     ``compact_lsh_index``, which folds the files the admission appended.
 
-    Arrival sizes follow a fixed pattern of sub-batch counts, so every run
-    measures the same mix of work whatever its seed; the seed picks the
-    text and the planted duplicates."""
+    Arrival sizes vary in a fixed pattern, in multiples of ``max_docs``,
+    and every one splits into two sub-batches, so every run measures the
+    same mix of work whatever its seed and every op is of one size class;
+    the seed picks the text and the planted duplicates.  The index has the
+    document count of the repo's sf0.01 documents table; arrival sizes are
+    chosen for run time."""
 
     name = "corpus_admit"
+    CYCLE = 2
     MAX_DOCS = 100
-    SUB_BATCHES = (1, 2, 1)
+    INDEX_DOCS = 500
+    #: arrival sizes of a cycle, then of the warm-up, in units of max_docs;
+    #: a warm-up that splits too would add about 5 s to every set-up
+    ARRIVALS = (1.5, 1.9)
+    WARMUP = 0.8
     FILES_PER_TABLE = 4
 
     def __init__(self, seed: int, base: str, smoke: bool = False) -> None:
         self.seed, self.base = seed, base
         self.max_docs = 10 if smoke else self.MAX_DOCS
-        self.indexed = inputs.corpus(seed, 150 if smoke else 500)
+        self.indexed = inputs.corpus(seed, 150 if smoke else self.INDEX_DOCS)
         os.makedirs(base)
         self.index_dir = f"file://{base}/index"
         self.next_id = len(self.indexed)
@@ -216,13 +238,13 @@ class CorpusAdmit:
         #: epoch -> arrival, and epoch -> the verdict rows admit_batch returned
         self.arrivals: dict[int, inputs.Arrival] = {}
         self.verdicts: dict[int, list] = {}
-        self._pending = self._stage(1)
+        self._pending = self._stage(self.WARMUP)
 
-    def _stage(self, subs: int) -> tuple[int, inputs.Arrival]:
-        """The next arrival and its epoch, sized to split into ``subs``
-        sub-batches."""
+    def _stage(self, share: float) -> tuple[int, inputs.Arrival]:
+        """The next arrival, of ``share`` times ``max_docs`` docs, and its
+        epoch."""
         epoch = self.staged
-        size = self.max_docs * subs - self.max_docs // 5
+        size = round(self.max_docs * share)
         arr = inputs.arrival(self.seed, epoch, self.next_id, size, self.indexed)
         self.staged += 1
         self.next_id += size
@@ -255,12 +277,15 @@ class CorpusAdmit:
         return 0
 
     def warmup(self) -> None:
+        """One arrival and its compaction, so the first loop arrival meets a
+        compacted index, as every later one does."""
         epoch, arr = self._pending
         self._admit(epoch, arr, self._batch(arr))
+        self._compact()
 
     def cycle(self):
-        for subs in self.SUB_BATCHES:
-            epoch, arr = self._stage(subs)
+        for share in self.ARRIVALS:
+            epoch, arr = self._stage(share)
             batch = self._batch(arr)
             yield "op", lambda e=epoch, a=arr, b=batch: self._admit(e, a, b)
             yield "maint", self._compact
@@ -337,21 +362,3 @@ class CorpusAdmit:
 
 WORKLOADS = {w.name: w for w in (GridIngest, CorpusAdmit)}
 
-
-def median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
-
-
-def tail(xs: list[float]) -> tuple[float, float, int]:
-    """(value, percentile, samples): the highest of p99.9 .. p50 that has at
-    least ten samples beyond it (nearest rank); with fewer than twenty
-    samples no such percentile exists and the maximum is reported."""
-    s = sorted(xs)
-    n = len(s)
-    for p in (99.9, 99.0, 95.0, 90.0, 75.0, 50.0):
-        rank = math.ceil(n * p / 100)
-        if n - rank >= 10:
-            return s[rank - 1], p, n
-    return s[-1], 100.0, n
