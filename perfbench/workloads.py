@@ -1,9 +1,9 @@
 """The benchmark's workloads: one object per set-up, driven through the
 engine's public functions only.
 
-A workload builds its starting state (``setup``, then ``warmup``: one
-primary op and its maintenance), then yields its closed-loop steps one cycle at a time
-(``cycle``).  Each step is ``(kind, call)``: ``kind`` is ``"op"`` for the
+A workload builds its starting state (``setup``), then yields its steps:
+first the warm-up pass (``warmup``), then the closed loop one cycle at a
+time (``cycle``).  Each step is ``(kind, call)``: ``kind`` is ``"op"`` for the
 primary operation and ``"maint"`` for the maintenance that follows every
 op, and ``call()`` performs exactly the engine work that is timed and
 returns the number of user items it handled.  Maintenance after every op
@@ -63,9 +63,8 @@ class GridIngest:
         #: rows ingest_batch reported, per accepted batch
         self.rows_written: list[int] = []
         os.makedirs(base)
-        #: the initial ingest (every defect planted) and the warm-up batch
+        #: the initial ingest, with every defect planted
         self._initial = self._stage_batch(plant_every_defect=True)
-        self._warm = self._stage_batch()
 
     def _stage_batch(self, plant_every_defect: bool = False) -> inputs.GridBatch:
         batch = inputs.grid_batch(
@@ -108,16 +107,17 @@ class GridIngest:
         ingest.compact_partitions(self.spark, self.ws.data_dir)
         return 0
 
-    def warmup(self) -> None:
-        """A second batch and its compaction: unlike the initial batch, it
-        meets an existing partition and manifest, as every loop batch does,
+    def warmup(self):
+        """A batch and its compaction: unlike the initial batch, it meets an
+        existing partition and manifest, as every loop batch does,
         and the first loop batch then meets a compacted table."""
-        self._warm.write(self._local(self.ws.in_dir))
-        self._ingest(self._warm)
-        self._compact()
+        return self._steps(1)
 
     def cycle(self):
-        for _ in range(self.CYCLE):
+        return self._steps(self.CYCLE)
+
+    def _steps(self, n: int):
+        for _ in range(n):
             batch = self._stage_batch()
             batch.write(self._local(self.ws.in_dir))
             yield "op", lambda b=batch: self._ingest(b)
@@ -222,9 +222,10 @@ class CorpusAdmit:
     MAX_DOCS = 100
     INDEX_DOCS = 500
     #: arrival sizes of a cycle, then of the warm-up, in units of max_docs;
-    #: a warm-up that splits too would add about 5 s to every set-up
+    #: the warm-up splits too, so the first loop arrival is not the run's
+    #: first pass through the split path
     ARRIVALS = (1.5, 1.9)
-    WARMUP = 0.8
+    WARMUP = (1.7,)
     FILES_PER_TABLE = 4
 
     def __init__(self, seed: int, base: str, smoke: bool = False) -> None:
@@ -238,7 +239,6 @@ class CorpusAdmit:
         #: epoch -> arrival, and epoch -> the verdict rows admit_batch returned
         self.arrivals: dict[int, inputs.Arrival] = {}
         self.verdicts: dict[int, list] = {}
-        self._pending = self._stage(self.WARMUP)
 
     def _stage(self, share: float) -> tuple[int, inputs.Arrival]:
         """The next arrival, of ``share`` times ``max_docs`` docs, and its
@@ -276,15 +276,16 @@ class CorpusAdmit:
         lsh_index.compact_lsh_index(self.spark, self.index_dir, self.FILES_PER_TABLE)
         return 0
 
-    def warmup(self) -> None:
-        """One arrival and its compaction, so the first loop arrival meets a
+    def warmup(self):
+        """An arrival and its compaction, so the first loop arrival meets a
         compacted index, as every later one does."""
-        epoch, arr = self._pending
-        self._admit(epoch, arr, self._batch(arr))
-        self._compact()
+        return self._steps(self.WARMUP)
 
     def cycle(self):
-        for share in self.ARRIVALS:
+        return self._steps(self.ARRIVALS)
+
+    def _steps(self, shares):
+        for share in shares:
             epoch, arr = self._stage(share)
             batch = self._batch(arr)
             yield "op", lambda e=epoch, a=arr, b=batch: self._admit(e, a, b)
