@@ -104,10 +104,14 @@ durability story: every pin is scoped to ONE driver call (a probe, a
 fold, one admit_batch invocation), and the crash/retry protocol
 re-reads the PERSISTED parquet tables plus ``meta.json`` — a failed
 call is retried from storage (vacuum + replay), never from cached
-blocks.  On clusters where mid-call executor loss is routine, swap the
-pins for ``persist(StorageLevel.MEMORY_AND_DISK)`` (recomputable
-lineage, at re-derivation cost) or reliable ``checkpoint()`` — the
-sharing structure is unchanged either way.
+blocks.  The committed index itself is never pinned: every probe and
+fold, including each sub-batch cycle of a split admission, reads it
+fresh from storage (``_read_meta`` + ``_committed``).  On clusters
+where mid-call executor loss is routine, swap the pins (the fold's
+band frame, the verdict frame, the split's tagged batch) for
+``persist(StorageLevel.MEMORY_AND_DISK)`` (recomputable lineage, at
+re-derivation cost) or reliable ``checkpoint()`` — the sharing
+structure is unchanged either way.
 
 Reference parity: no reference analog (the reference's pipeline has no
 dedup at all); this is the LLM-training-corpus maintenance workflow
@@ -359,79 +363,6 @@ def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> Non
     _write_meta(spark, index_dir, -(2**62) if mx is None else int(mx))
 
 
-class _IndexView:
-    """The committed index, read ONCE per ``admit_batch`` call and shared
-    by every sub-batch cycle (VERDICT r12 #6).
-
-    Without it each of k sub-batch cycles re-opened and re-scanned the
-    full committed tables three times over (probe bands, probe hsets,
-    fold occupancy) — ``lsh_admit_split4`` paid ~4x the one-shot's full
-    fixed cost (BENCH_IO r12: 14.91 s vs 3.75 s) even though between
-    sub-batches the index changes ONLY by the just-folded generation.
-    The view pins the base tables (persist: memory, disk-spilled —
-    they are re-read k times within one call, then released) and tracks
-    each committed fold's appended rows as in-memory deltas; ``current``
-    is base ∪ deltas, which under the module's single-writer contract is
-    EXACTLY the committed snapshot a fresh ``_committed`` read would
-    return after those folds.  Replay stays byte-exact: the as-of view
-    is id-gated downstream, and an id filter over base ∪ deltas equals
-    the same filter over a fresh read (append-only ids; proved by the
-    existing cross-process replay test).
-
-    Deltas are the POST-GATE admitted band rows and the keeper hsets —
-    precisely the rows the fold appended, localCheckpoint-pinned so k-1
-    later cycles re-read a materialized batch-sized frame instead of
-    re-running the admission lineage.
-
-    Measured honestly (r13, quiet spin canaries 0.666/0.659, sf0.1,
-    median-of-3): oneshot 5.08 s, split4 13.33 s without the view vs
-    12.74 s with it — a 4.4% saving at sandbox scale, where the index
-    tables are sub-MB and re-opening them costs almost nothing.  The
-    remaining split4-vs-oneshot gap is per-cycle DRIVER fixed cost
-    (~30 sequential jobs per probe/fold cycle: stats .first()s, eager
-    localCheckpoints, the shard_verdicts chain), which no read cache can
-    remove — the cycles are sequential BY DESIGN (the append-only fold
-    order is the admission contract).
-
-    Re-priced at INDEX scale r14 (``scaling_probe.py --split``: view vs
-    a no-cache pre-r13 emulation, 1x vs 10x synthetic index): at the 10x
-    cell all three captures agree the view costs 4-10% (the persist
-    overhead without enough re-read volume to amortize), and admit time
-    is FLAT from 1x to 10x index (driver fixed cost swamps the scan
-    term: the ``--probe`` curve puts a full 10x-index scan at only
-    +9-11% over 1x here).  So at ANY sandbox-reachable scale the view
-    is cost-neutral-to-slightly-negative and NOT CI-fenceable.  The
-    payoff remains structural and arrives where the probe curve turns
-    linear in index bytes: k-1 full listings + scans of a 100 TB table
-    pair eliminated per oversized arrival — a derivation ((k-1) x the
-    probe's index-scan term), not a sandbox-measurable ratio — at the
-    price of one persist whose spill is local-disk (MEMORY_AND_DISK
-    default) and released at call end."""
-
-    def __init__(self, spark: SparkSession, index_dir: str):
-        hw = _read_meta(spark, index_dir)["max_doc_id"]
-        self._bands = _committed(spark, index_dir, "bands", hw).persist()
-        self._hsets = _committed(spark, index_dir, "hsets", hw).persist()
-        self._delta_bands: list[DataFrame] = []
-        self._delta_hsets: list[DataFrame] = []
-
-    def current(self) -> tuple[DataFrame, DataFrame]:
-        b, h = self._bands, self._hsets
-        for d in self._delta_bands:
-            b = b.unionByName(d)
-        for d in self._delta_hsets:
-            h = h.unionByName(d)
-        return b, h
-
-    def add_delta(self, bands: DataFrame, hsets: DataFrame) -> None:
-        self._delta_bands.append(bands)
-        self._delta_hsets.append(hsets)
-
-    def release(self) -> None:
-        self._bands.unpersist()
-        self._hsets.unpersist()
-
-
 def _probe_frames(
     spark: SparkSession,
     index_dir: str,
@@ -439,12 +370,13 @@ def _probe_frames(
     inc_gated: DataFrame,
     inc_hsets: DataFrame,
     as_of_id: int | None = None,
-    idx_view: _IndexView | None = None,
 ) -> DataFrame:
     """The probe on PRE-SKETCHED batch frames — shared by
     :func:`probe_lsh_index` (which sketches then probes) and
     :func:`admit_batch` (which sketches ONCE and feeds probe and fold
-    from the same frames).
+    from the same frames).  The index is read fresh on every call: the
+    committed snapshot (``_read_meta`` + ``_committed``), so a sub-batch
+    cycle sees every fold committed before it.
 
     ``as_of_id`` reconstructs a PAST index view for replay
     (:func:`admit_batch`'s epoch protocol): only ids strictly below it
@@ -453,15 +385,9 @@ def _probe_frames(
     minimum, so ``as_of_id = min(batch ids)`` is precisely the index
     the batch's original probe saw."""
     ids = F.broadcast(spine)
-    if idx_view is not None:
-        # the caller's pinned committed view (base ∪ committed deltas) —
-        # identical rows to a fresh meta+_committed read, without
-        # re-opening the tables per sub-batch cycle
-        idx_bands, idx_hsets = idx_view.current()
-    else:
-        hw = _read_meta(spark, index_dir)["max_doc_id"]
-        idx_bands = _committed(spark, index_dir, "bands", hw)
-        idx_hsets = _committed(spark, index_dir, "hsets", hw)
+    hw = _read_meta(spark, index_dir)["max_doc_id"]
+    idx_bands = _committed(spark, index_dir, "bands", hw)
+    idx_hsets = _committed(spark, index_dir, "hsets", hw)
     if as_of_id is not None:
         idx_bands = idx_bands.filter(F.col("doc_id") < as_of_id)
         idx_hsets = idx_hsets.filter(F.col("doc_id") < as_of_id)
@@ -551,14 +477,13 @@ def _fold_frames(
     new_bands: DataFrame,
     new_hsets: DataFrame,
     epoch=None,
-    idx_view: _IndexView | None = None,
 ) -> int:
     """The fold on PRE-SKETCHED keeper frames (``new_bands`` UNGATED) —
     shared by :func:`update_lsh_index` (which sketches then folds) and
     :func:`admit_batch` (one sketch for probe and fold; passes its
-    ``epoch`` so the commit records the admission transaction, and its
-    ``idx_view`` so the occupancy read reuses the pinned committed view
-    and the committed delta is registered for later sub-batch cycles)."""
+    ``epoch`` so the commit records the admission transaction).  The
+    occupancy read is the committed snapshot, read fresh like the
+    probe's."""
     mn_mx = kept_ids.agg(
         F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"), F.count("*").alias("n")
     ).first()
@@ -586,13 +511,8 @@ def _fold_frames(
     # touched bucket.  Committed snapshot: a crashed update's leftovers
     # must not count toward the cap.
     touched = new_bands.select("band", "bk").distinct()
-    committed_bands = (
-        idx_view.current()[0]
-        if idx_view is not None
-        else _committed(spark, index_dir, "bands", high_water)
-    )
     occ = (
-        committed_bands
+        _committed(spark, index_dir, "bands", high_water)
         .join(F.broadcast(touched), ["band", "bk"], "left_semi")
         .groupBy("band", "bk")
         .agg(F.count("*").alias("occ"))
@@ -604,15 +524,6 @@ def _fold_frames(
         .filter(F.col("rn") + F.coalesce("occ", F.lit(0)) <= BUCKET_CAP)
         .select("doc_id", "band", "bk")
     )
-    if idx_view is not None:
-        # pin the delta for later cycles.  LAZY checkpoints (OPTIMIZATION
-        # r16, guide §1.2 driver fixed cost): the blocks materialize as a
-        # side effect of the append writes just below, so later cycles
-        # still re-read a materialized batch-sized frame — the former
-        # EAGER checkpoints were two separate driver jobs per sub-batch
-        # cycle for the same pinning.
-        admitted = admitted.localCheckpoint(eager=False)
-        new_hsets = new_hsets.localCheckpoint(eager=False)
     try:
         admitted.write.mode("append").parquet(f"{index_dir}/bands.parquet")
         new_hsets.write.mode("append").parquet(f"{index_dir}/hsets.parquet")
@@ -622,11 +533,6 @@ def _fold_frames(
         # epoch-bearing admit_batch must re-vacuum, not trust the cache
         _KNOWN_CLEAN.discard(index_dir)
         raise
-    if idx_view is not None:
-        # registered only AFTER the commit: a crashed fold's rows must
-        # stay invisible to later cycles, exactly as _committed's
-        # high-water filter would keep them
-        idx_view.add_delta(admitted, new_hsets)
     return int(mn_mx["n"])
 
 
@@ -684,7 +590,6 @@ def admit_batch(
     max_docs: int | None = None,
     epoch=None,
     _replay: bool | None = None,
-    _view: _IndexView | None = None,
     _stats: tuple | None = None,
 ) -> DataFrame:
     """Probe-and-fold an arriving ``batch`` (doc_id, text, ...) in one
@@ -831,7 +736,6 @@ def admit_batch(
             gate_buckets(bands_u),
             hsets_b,
             as_of_id=stats["mn"] if _replay else None,
-            idx_view=_view,
         ).localCheckpoint(eager=False)
         keeps = verdicts.filter(F.col("decision") == "keep")
         if _replay:
@@ -853,7 +757,6 @@ def admit_batch(
             bands_u.join(keep_b, "doc_id"),
             hsets_b.join(keep_b, "doc_id"),
             epoch=epoch,
-            idx_view=_view,
         )
         return verdicts
     # localCheckpoint so the k per-sub filters materialize the batch once
@@ -878,40 +781,24 @@ def admit_batch(
         )
         .collect()
     }
-    # generation reuse (VERDICT r12 #6): pin the committed view ONCE for
-    # all k sub-batch cycles — each cycle's probe and fold read the
-    # persisted base plus the prior cycles' committed deltas instead of
-    # re-opening the full index tables per cycle.  Created at the
-    # OUTERMOST split only (a skew re-split inherits its parent's view).
-    created_view = _view is None
-    if created_view:
-        _view = _IndexView(spark, index_dir)
-    try:
-        parts = []
-        for i in range(k):
-            if i not in sub_stats:
-                continue  # width-equal cuts leave sparse ranges empty
-            sub = tagged.filter(F.col("_sub") == i).drop("_sub")
-            parts.append(
-                # max_docs forwards: id skew can over-fill a width-equal
-                # range, and an over-filled sub-batch must re-split (within
-                # its strictly narrower interval), not broadcast
-                # over-envelope
-                admit_batch(
-                    spark, index_dir, sub, max_docs=max_docs,
-                    epoch=epoch, _replay=_replay, _view=_view,
-                    _stats=sub_stats[i],
-                )
+    parts = []
+    for i in range(k):
+        if i not in sub_stats:
+            continue  # width-equal cuts leave sparse ranges empty
+        sub = tagged.filter(F.col("_sub") == i).drop("_sub")
+        parts.append(
+            # max_docs forwards: id skew can over-fill a width-equal
+            # range, and an over-filled sub-batch must re-split (within
+            # its strictly narrower interval), not broadcast over-envelope
+            admit_batch(
+                spark, index_dir, sub, max_docs=max_docs,
+                epoch=epoch, _replay=_replay, _stats=sub_stats[i],
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        # the verdict frames are localCheckpoint-materialized per leaf, so
-        # releasing the view's pinned base under them is safe
-        return out
-    finally:
-        if created_view:
-            _view.release()
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def compact_lsh_index(

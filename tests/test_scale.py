@@ -1014,16 +1014,22 @@ def test_admit_batch_subbatching_matches_oneshot_on_real_corpus(
 
 
 def test_admit_batch_chain_divergence_is_admissive_never_lossy(spark, tmp_path):
-    """The documented divergence case, pinned: I indexed, batch = [A, B]
-    with A a near-dup of I (J~0.52), B a near-dup of A (J~0.52) but NOT
-    of I (J~0.23 < 0.35).  One-shot drops BOTH (A: index dup; B: shard
-    dup of A — pairwise n49 semantics, even though A itself was
-    dropped).  Split so A and B land in different sub-batches: A drops,
-    is NOT folded, and B — judged only against the index + folded
-    keepers — flips to keep.  Sub-batching must only ever flip
-    drop -> keep (never lose a doc one-shot admits), and the admitted
-    set must stay near-dup-free: B admitted alone satisfies it (B is
-    not a verified near-dup of I)."""
+    """The documented divergence cases, pinned.
+
+    Dropped link: I indexed, batch = [A, B] with A a near-dup of I
+    (J~0.52), B a near-dup of A (J~0.52) but NOT of I (J~0.23 < 0.35).
+    One-shot drops BOTH (A: index dup; B: shard dup of A — pairwise n49
+    semantics, even though A itself was dropped).  Split so A and B land
+    in different sub-batches: A drops, is NOT folded, and B — judged
+    only against the index + folded keepers — flips to keep.
+    Sub-batching must only ever flip drop -> keep (never lose a doc
+    one-shot admits), and the admitted set must stay near-dup-free: B
+    admitted alone satisfies it (B is not a verified near-dup of I).
+
+    Kept link: batch = [A, A'] with A novel and A' an exact copy.  A is
+    kept either way; one-shot drops A' as a shard dup of A.  The split
+    folds A first, so the next sub-batch, reading the committed index,
+    must find A there: A' is drop_index_dup with an index candidate."""
     from etl_bom_radiation_spark.lsh_index import admit_batch, build_lsh_index
 
     base = (
@@ -1034,27 +1040,42 @@ def test_admit_batch_chain_divergence_is_admissive_never_lossy(spark, tmp_path):
     a[3], a[8], a[14] = "dolphin", "iguana", "ostrich"
     b = list(a)
     b[5], b[11], b[17] = "falcon", "lemur", "rhino"
+    novel = (
+        "amber basil cedar dune ember fern grove harbor iris jade "
+        "kelp lotus maple nectar olive pearl quartz river sage thyme"
+    ).split()
     seed = _docs_frame(spark, [(1, " ".join(base))])
-    batch = _docs_frame(spark, [(10, " ".join(a)), (20, " ".join(b))])
-    one, sub = str(tmp_path / "one"), str(tmp_path / "sub")
-    build_lsh_index(spark, seed, one)
-    build_lsh_index(spark, seed, sub)
 
-    dec = lambda v: {r.doc_id: r.decision for r in v.collect()}
-    d_one = dec(admit_batch(spark, one, batch))
-    d_sub = dec(admit_batch(spark, sub, batch, max_docs=1))
+    def admit(tag, first, second):
+        batch = _docs_frame(spark, [(10, " ".join(first)), (20, " ".join(second))])
+        one, sub = str(tmp_path / f"{tag}_one"), str(tmp_path / f"{tag}_sub")
+        build_lsh_index(spark, seed, one)
+        build_lsh_index(spark, seed, sub)
+        v_one = admit_batch(spark, one, batch).collect()
+        v_sub = admit_batch(spark, sub, batch, max_docs=1).collect()
+        bands = spark.read.parquet(f"{sub}/bands.parquet")
+        sub_ids = sorted(
+            r.doc_id for r in bands.select("doc_id").distinct().collect()
+        )
+        return v_one, v_sub, sub_ids
 
-    assert d_one == {10: "drop_index_dup", 20: "drop_shard_dup"}
-    assert d_sub == {10: "drop_index_dup", 20: "keep"}
+    dec = lambda rows: {r.doc_id: r.decision for r in rows}
+    keeps = lambda rows: {r.doc_id for r in rows if r.decision == "keep"}
+
+    v_one, v_sub, sub_ids = admit("dropped", a, b)
+    assert dec(v_one) == {10: "drop_index_dup", 20: "drop_shard_dup"}
+    assert dec(v_sub) == {10: "drop_index_dup", 20: "keep"}
     # never lossy: every one-shot keep is a sub-batched keep
-    assert {d for d, v in d_one.items() if v == "keep"} <= {
-        d for d, v in d_sub.items() if v == "keep"
-    }
+    assert keeps(v_one) <= keeps(v_sub)
     # the folded index reflects exactly the sub-batched admission
-    bands = spark.read.parquet(f"{sub}/bands.parquet")
-    assert sorted(
-        r.doc_id for r in bands.select("doc_id").distinct().collect()
-    ) == [1, 20]
+    assert sub_ids == [1, 20]
+
+    v_one, v_sub, sub_ids = admit("kept", novel, novel)
+    assert dec(v_one) == {10: "keep", 20: "drop_shard_dup"}
+    assert dec(v_sub) == {10: "keep", 20: "drop_index_dup"}
+    assert {r.doc_id: r.n_index_cand for r in v_sub}[20] >= 1
+    assert keeps(v_one) <= keeps(v_sub)
+    assert sub_ids == [1, 10]
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -2044,27 +2065,3 @@ def test_split_batch_refuses_overflowing_id_span(spark, tmp_path):
         (-(2**61), 0),
         (2**61, 1),
     ]
-
-
-def test_admit_batch_subbatches_share_one_committed_read(spark, tmp_path, monkeypatch):
-    """Generation reuse (VERDICT r12 #6): a sub-batched admission reads
-    the committed index tables ONCE (the _IndexView pin), not once per
-    sub-batch cycle — each later cycle sees base ∪ committed deltas.
-    Without the view this admission made one bands+hsets read per probe
-    plus one bands read per fold (3 sub-batches = 6 bands + 3 hsets)."""
-    import etl_bom_radiation_spark.lsh_index as L
-
-    d = str(tmp_path / "idx")
-    L.build_lsh_index(spark, _docs_frame(spark, _EPOCH_SEED), d)
-
-    reads = []
-    real = L._committed
-
-    def counting(spark_, index_dir_, name, hw):
-        reads.append(name)
-        return real(spark_, index_dir_, name, hw)
-
-    monkeypatch.setattr(L, "_committed", counting)
-    out = _kp(L.admit_batch(spark, d, _docs_frame(spark, _EPOCH_BATCH), max_docs=2))
-    assert len(out) == len(_EPOCH_BATCH)
-    assert reads.count("bands") == 1 and reads.count("hsets") == 1, reads

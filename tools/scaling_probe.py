@@ -26,9 +26,7 @@ of batch runtimes (M multiplies the micro-batch count); ``--plateau``
 ladders a pipeline's micro-batch count geometrically until its state
 rows go flat across a doubling (default: t09); ``--fold`` /
 ``--probe`` measure the persisted LSH index's maintenance pair (fold a
-fixed batch into, resp. probe a fixed batch against, a 1x vs Mx index);
-``--split`` prices the admit_batch ``_IndexView`` (shipped vs a no-cache
-pre-r13 emulation) at 1x vs Mx index scale.
+fixed batch into, resp. probe a fixed batch against, a 1x vs Mx index).
 Prints one JSON line: {"m": M, "ops": {name: {"t1": s, "tm": s,
 "ratio": r}}}.  Corpora go under /tmp and are removed on exit.
 """
@@ -667,108 +665,6 @@ def probe_main(mult: int) -> int:
     return 0
 
 
-def split_main(mult: int) -> int:
-    """``--split`` (VERDICT r13 #6): price the ``_IndexView`` at INDEX
-    scale, not just sandbox.  Times ``admit_batch`` k=4 (the bench's
-    ``lsh_admit_split4`` shape) of a fixed batch into a 1x vs Mx
-    committed index, with the shipped view vs a no-cache emulation of
-    the pre-r13 behavior (every sub-batch cycle re-opens and re-scans
-    the committed tables via a fresh meta + _committed read — result-
-    identical under the single-writer contract, since a committed
-    re-read after a fold equals base ∪ deltas).
-
-    The structural claim to verify: the view's saving is k-1 full index
-    scans per oversized arrival, so it should GROW with the index (the
-    sandbox sf0.1 measurement was -4.4% on sub-MB tables).  Prints
-    {"m": M, "split": {"1x": {view, noview, saving}, "mx": {...}}}."""
-    _canary_start()
-    import etl_bom_radiation_spark.lsh_index as LI
-    from pyspark.sql import functions as F
-
-    from etl_bom_radiation_spark.session import get_spark
-
-    class _NoCacheView:
-        """Pre-r13 emulation: no pinned base, no deltas — ``current()``
-        is a fresh committed read (meta + both parquet opens) each time,
-        exactly what every sub-batch cycle paid before the view."""
-
-        def __init__(self, spark, index_dir):
-            self._spark, self._dir = spark, index_dir
-
-        def current(self):
-            hw = LI._read_meta(self._spark, self._dir)["max_doc_id"]
-            return (
-                LI._committed(self._spark, self._dir, "bands", hw),
-                LI._committed(self._spark, self._dir, "hsets", hw),
-            )
-
-        def add_delta(self, bands, hsets):
-            pass
-
-        def release(self):
-            pass
-
-    spark = get_spark(app_name="scaling_probe_split")
-    spark.sparkContext.setLogLevel("ERROR")
-    base = tempfile.mkdtemp(prefix="probe_split_")
-    out = {}
-    try:
-        c1, cm = f"{base}/c1", f"{base}/cm"
-        gen_corpus(spark, c1, 1)
-        gen_corpus(spark, cm, mult)
-        docs1 = spark.read.parquet(f"{c1}/documents.parquet").select("doc_id", "text")
-        docsm = spark.read.parquet(f"{cm}/documents.parquet").select("doc_id", "text")
-        LI.build_lsh_index(spark, docs1, f"{base}/idx1")
-        LI.build_lsh_index(spark, docsm, f"{base}/idxm")
-        batch = (
-            docs1.filter(F.col("doc_id") % 10 == 3)
-            .limit(BASE_DOCS // 10)
-            .withColumn("doc_id", F.col("doc_id") + F.lit(10_000_000))
-            .localCheckpoint()
-        )
-        n = batch.count()  # materialize outside every timer
-        max_docs = max(1, -(-n // 4))  # k=4, the bench split4 shape
-
-        def timed_admit(idx: str, view_cls) -> float:
-            real = LI._IndexView
-            LI._IndexView = view_cls
-            try:
-                best = float("inf")
-                for i in range(3):  # first run is the warmup
-                    scratch = f"{base}/s_{os.path.basename(idx)}_{view_cls.__name__}_{i}"
-                    shutil.copytree(idx, scratch)
-                    t0 = time.time()
-                    admitted = LI.admit_batch(
-                        spark, scratch, batch, max_docs=max_docs
-                    )
-                    admitted.write.format("noop").mode("overwrite").save()
-                    dt = time.time() - t0
-                    shutil.rmtree(scratch, ignore_errors=True)
-                    if i > 0:
-                        best = min(best, dt)
-                return round(best, 3)
-            finally:
-                LI._IndexView = real
-
-        for tag, idx in (("1x", f"{base}/idx1"), ("mx", f"{base}/idxm")):
-            with_v = timed_admit(idx, LI._IndexView)
-            no_v = timed_admit(idx, _NoCacheView)
-            out[tag] = {
-                "view": with_v,
-                "noview": no_v,
-                "saving": round(1 - with_v / no_v, 3) if no_v else None,
-            }
-            print(
-                f"split4 into {tag} index: view={with_v}s noview={no_v}s "
-                f"saving={out[tag]['saving']}",
-                file=sys.stderr,
-            )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    print(json.dumps({"m": mult, "split": out, "spin": [_CANARY_AT_START, _spin_canary()], "io_spin": [_IO_CANARY_AT_START, _io_canary()]}))
-    return 0
-
-
 def main() -> int:
     _canary_start()
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -785,8 +681,6 @@ def main() -> int:
         return fold_main(mult)
     if "--probe" in sys.argv:
         return probe_main(mult)
-    if "--split" in sys.argv:
-        return split_main(mult)
     relational = "--relational" in sys.argv
     hot = "--hot" in sys.argv
     from etl_bom_radiation_spark.queries import load_all
