@@ -105,9 +105,11 @@ def _move(spark: SparkSession, src_uri: str, dst_dir: str) -> None:
         raise OSError(f"rename failed: {src_uri} -> {dst.toString()}")
 
 
-def _move_all(
-    spark: SparkSession, paths: list[str], dst_dir: str, max_workers: int = 16
-) -> dict[str, str]:
+#: renames in flight per :func:`_move_all` call
+_MOVE_WORKERS = 16
+
+
+def _move_all(spark: SparkSession, paths: list[str], dst_dir: str) -> dict[str, str]:
     """Move a batch of files with a bounded driver-side thread pool (py4j
     gateway and Hadoop FileSystem are both thread-safe). One rename per
     file is inherent to the prefix state machine; the pool amortizes the
@@ -131,7 +133,7 @@ def _move_all(
         except Exception as e:  # per-file isolation: collect, don't abort
             return (p, f"{type(e).__name__}: {e}")
 
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(paths))) as ex:
+    with ThreadPoolExecutor(max_workers=min(_MOVE_WORKERS, len(paths))) as ex:
         return dict(r for r in ex.map(_try, paths) if r is not None)
 
 
@@ -255,7 +257,6 @@ def ingest_batch(
     spark: SparkSession,
     ws: Workspace,
     fq_table: str | None = None,
-    move_files: bool = True,
     max_file_bytes: int = DEFAULT_MAX_FILE_BYTES,
     cluster_spatial: bool = False,
     stats_manifest_cols: list[str] | None = None,
@@ -350,17 +351,36 @@ def ingest_batch(
 
             refresh_manifest(spark, ws.data_dir, stats_manifest_cols)
 
-    if move_files:
-        res.move_failures = {
-            **_move_all(spark, sorted(ok_files), ws.done_dir),
-            **_move_all(spark, sorted(bad_files), ws.quarantine_dir),
-        }
+    res.move_failures = {
+        **_move_all(spark, sorted(ok_files), ws.done_dir),
+        **_move_all(spark, sorted(bad_files), ws.quarantine_dir),
+    }
     return res
 
 
 #: name of the old-generation manifest inside a compaction temp dir;
 #: underscore-prefixed so Spark ignores it even if the dir is ever scanned
 _COMPACT_MANIFEST = "_OLDFILES"
+
+#: partition fold jobs :func:`compact_partitions` runs at once
+_COMPACT_CONCURRENCY = 8
+
+
+def _publish_manifest(fs, jvm, dir_uri: str, name: str, lines: list[str]) -> None:
+    """Write the committed-marker manifest ``dir_uri/name`` so that its
+    EXISTENCE means COMPLETE (code-review r11): the lines are written
+    under a dot-temp name, then renamed in.  A crash before the rename
+    leaves no manifest — the marker-less state both protocols already
+    discard and redo — never a torn one that replays as committed."""
+    final = jvm.org.apache.hadoop.fs.Path(f"{dir_uri}/{name}")
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{dir_uri}/.{name}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray("\n".join(lines), "utf-8"))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not publish manifest {final}")
 
 
 def _compact_tmp(jvm, part_dir):
@@ -372,12 +392,13 @@ def _compact_tmp(jvm, part_dir):
 
 
 def _finish_compaction(fs, jvm, part_dir, tmp) -> bool:
-    """Resume a crashed swap (code-review r3): a temp dir WITH a manifest
-    means the folded output was fully written — delete the manifest's old
-    generation and move any not-yet-renamed new files in (idempotent); a
-    temp dir WITHOUT a manifest means the folded write itself died —
-    discard it and let compaction redo the partition. Returns True if a
-    completed swap was recovered."""
+    """Run the swap of a compaction temp dir — the first run and the
+    resume of a crashed one (code-review r3) are this same idempotent
+    step: a temp dir WITH a manifest means the folded output was fully
+    written — move any not-yet-renamed new files in, then delete the
+    manifest's old generation; a temp dir WITHOUT a manifest means the
+    folded write itself died — discard it and let compaction redo the
+    partition. Returns True if a committed swap was completed."""
     manifest = jvm.org.apache.hadoop.fs.Path(f"{tmp.toString()}/{_COMPACT_MANIFEST}")
     if not fs.exists(manifest):
         # a manifest-less temp is scratch; a survivor of a failed delete
@@ -390,14 +411,12 @@ def _finish_compaction(fs, jvm, part_dir, tmp) -> bool:
     finally:
         stream.close()
     part_uri = part_dir.toString()
-    # SAME order as the original swap in _compact_one — rename the
-    # remaining folded files in FIRST, delete the old generation after —
-    # so the resume, like the swap it replays, never exposes an empty or
-    # undercounted partition to a concurrent reader (the transient state
-    # is both generations visible, i.e. the double-count the crashed run
-    # already left; code-review r11 — the old delete-first replay opened
-    # a reader-visible undercount window the swap's own ordering exists
-    # to prevent).  Booleans checked (ADVICE r10 discipline): a
+    # rename the remaining folded files in FIRST, delete the old
+    # generation after, so neither the swap nor its resume ever exposes
+    # an empty or undercounted partition to a concurrent reader (the
+    # transient state is both generations visible, i.e. the double-count
+    # a crashed run already left; code-review r11 — the old delete-first
+    # replay opened a reader-visible undercount window).  Booleans checked (ADVICE r10 discipline): a
     # silently-failed rename would strand a folded file for the
     # recursive temp delete below to destroy (data loss); a
     # silently-failed old delete leaves double-counted rows.  Raising
@@ -442,61 +461,24 @@ def _compact_one(
     ]
     if len(files) < min_files_to_compact:
         return False
-    part_uri = part_dir.toString()
     (
-        spark.read.parquet(part_uri)
+        spark.read.parquet(part_dir.toString())
         .coalesce(max_files_per_partition)
         .write.mode("overwrite")
         .parquet(tmp.toString())
     )
     # manifest of the old generation goes into the temp dir AFTER the
-    # folded write and BEFORE any rename: its presence marks the swap
-    # as committed, making a crash anywhere in the rename/delete
-    # window repairable by _finish_compaction on the next run.
-    # Written COMPLETE under a dot-temp name, then renamed in
-    # (code-review r11): _finish_compaction trusts the manifest's
-    # EXISTENCE, so a create-then-write crash must not leave a torn
-    # manifest — replaying one as a committed swap would move the folded
-    # generation in while deleting only the listed (possibly zero) old
-    # files, then destroy the temp dir: permanent double-counted rows
-    # with no repair marker left.  The rename makes existence == complete
-    # (the same swap discipline as the data files; a crash before it
-    # leaves a manifest-less temp, which the next run discards).
-    manifest_p = jvm.org.apache.hadoop.fs.Path(
-        f"{tmp.toString()}/{_COMPACT_MANIFEST}"
+    # folded write and BEFORE any rename: its presence marks the swap as
+    # committed, so a torn manifest replayed as committed would move the
+    # folded generation in while deleting only the listed (possibly
+    # zero) old files — permanent double-counted rows.  The swap itself
+    # is the crash-recovery replay: new part-file names are UUID-unique,
+    # renamed in first, the old generation deleted after — readers never
+    # see an empty partition.
+    _publish_manifest(
+        fs, jvm, tmp.toString(), _COMPACT_MANIFEST, [f.getName() for f in files]
     )
-    manifest_tmp = jvm.org.apache.hadoop.fs.Path(
-        f"{tmp.toString()}/.{_COMPACT_MANIFEST}.tmp"
-    )
-    out = fs.create(manifest_tmp, True)
-    out.write(bytearray("\n".join(f.getName() for f in files), "utf-8"))
-    out.close()
-    if not fs.rename(manifest_tmp, manifest_p):
-        raise OSError(
-            f"compaction swap: could not publish manifest {manifest_p}"
-        )
-    # new part-file names are UUID-unique: rename in first, delete the
-    # old generation after — readers never see an empty partition.
-    # Booleans checked (ADVICE r10 discipline): a silently-failed rename
-    # would strand a folded file for the temp-dir delete to destroy
-    # (data loss); a silently-failed old delete leaves double-counted
-    # rows.  Raising here keeps the manifest-marked temp, so the next
-    # run's _finish_compaction resumes the swap idempotently.
-    for s in fs.listStatus(tmp):
-        if s.isFile() and not s.getPath().getName().startswith(("_", ".")):
-            dst = jvm.org.apache.hadoop.fs.Path(
-                part_uri + "/" + s.getPath().getName()
-            )
-            if not fs.rename(s.getPath(), dst):
-                raise OSError(
-                    f"compaction swap: could not move folded file "
-                    f"{s.getPath()} into {part_uri}"
-                )
-    for f in files:
-        if fs.exists(f) and not fs.delete(f, False):
-            raise OSError(f"compaction swap: could not delete old file {f}")
-    fs.delete(tmp, True)  # best-effort: content moved out; leftover is scratch
-    return True
+    return _finish_compaction(fs, jvm, part_dir, tmp)
 
 
 def compact_partitions(
@@ -504,7 +486,6 @@ def compact_partitions(
     data_dir: str,
     max_files_per_partition: int = 1,
     min_files_to_compact: int = 2,
-    max_concurrency: int = 8,
 ) -> int:
     """Small-file compaction for the partitioned sink (the known 100 TB
     follow-up of per-file incremental ingest: millions of small parquet
@@ -532,7 +513,7 @@ def compact_partitions(
     output only ever accretes).
 
     Partitions are independent, so their fold jobs run under a bounded
-    driver-side thread pool (``max_concurrency`` concurrent Spark jobs —
+    driver-side thread pool (``_COMPACT_CONCURRENCY`` concurrent Spark jobs —
     the scheduler interleaves them across executor slots; VERDICT r3: the
     serial loop was the bottleneck at a millions-of-partitions archive).
     A partition that fails mid-swap doesn't strand the rest: every
@@ -575,7 +556,7 @@ def compact_partitions(
             errors.append(e)
             return False
 
-    with ThreadPoolExecutor(max_workers=min(max_concurrency, len(parts))) as ex:
+    with ThreadPoolExecutor(max_workers=min(_COMPACT_CONCURRENCY, len(parts))) as ex:
         compacted = sum(ex.map(_try, parts))
     if errors:
         raise errors[0]
@@ -650,7 +631,7 @@ def reprocess_partition(
     # would decode every archived source file twice
     obs = Observation("reprocess")
     points = points.observe(obs, F.count(F.lit(1)).alias("rows"))
-    with_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         points.repartition(*PARTITION_COLS)
         .write.mode("overwrite")
@@ -658,11 +639,6 @@ def reprocess_partition(
         .parquet(ws.data_dir)
     )
     return obs.get["rows"]
-
-
-def with_conf(spark: SparkSession, key: str, value: str) -> None:
-    """Set a runtime SQL conf (split out so callers/tests can see the knob)."""
-    spark.conf.set(key, value)
 
 
 #: manifest inside a batch staging dir listing the staged data files; its
@@ -691,6 +667,24 @@ def _staged_data_files(fs, staging) -> list[str]:
     return sorted(rels)
 
 
+def _stage_batch(fs, jvm, batch_df: DataFrame, staging_uri: str) -> None:
+    """(Re)stage one micro-batch into ``staging_uri``, then publish the
+    manifest that marks the staged generation complete.  Overwrite
+    discards any partial generation whose write or manifest publish
+    crashed — nothing from it was published (publish only runs with a
+    manifest)."""
+    (
+        batch_df.repartition(*PARTITION_COLS)
+        .write.mode("overwrite")
+        .partitionBy(*PARTITION_COLS)
+        .parquet(staging_uri)
+    )
+    staging = jvm.org.apache.hadoop.fs.Path(staging_uri)
+    _publish_manifest(
+        fs, jvm, staging_uri, _STAGE_MANIFEST, _staged_data_files(fs, staging)
+    )
+
+
 def publish_staged_batch(
     spark: SparkSession, staging_uri: str, data_dir: str
 ) -> list[str]:
@@ -699,9 +693,9 @@ def publish_staged_batch(
 
     Protocol (mirrors the compaction swap's manifest recovery):
 
-    1. no manifest in the staging dir -> the staged write itself died;
-       caller rewrites the staging dir (mode=overwrite) and writes the
-       manifest AFTER the write completes;
+    1. no manifest in the staging dir -> the staged write or its
+       manifest publish died; caller restages (:func:`_stage_batch`:
+       mode=overwrite, manifest renamed in AFTER the write completes);
     2. manifest present -> the staged generation is complete and immutable;
        each listed file renames into its partition dir (staged names are
        unique, so a re-run renames only the files a previous attempt
@@ -777,7 +771,7 @@ def ingest_stream(
     idempotent — so each batch goes through stage -> manifest -> publish:
     the batch decodes ONCE into ``<checkpoint>/staging/<batch_id>``
     (overwrite mode, so a crashed staging write just re-runs), a manifest
-    written after the staged write marks that generation complete and
+    renamed in after the staged write marks that generation complete and
     immutable, and :func:`publish_staged_batch` renames the staged files
     into the partition dirs (unique names; renames are individually
     idempotent under replay). Rollup partials land in a per-batch
@@ -819,18 +813,7 @@ def ingest_stream(
             return
         manifest = jvm.org.apache.hadoop.fs.Path(f"{staging_uri}/{_STAGE_MANIFEST}")
         if not fs.exists(manifest):
-            # (re)stage: overwrite discards any partial generation whose
-            # write crashed before its manifest existed — nothing from it
-            # was published (publish only runs with a manifest)
-            (
-                batch_df.repartition(*PARTITION_COLS)
-                .write.mode("overwrite")
-                .partitionBy(*PARTITION_COLS)
-                .parquet(staging_uri)
-            )
-            out = fs.create(manifest, True)
-            out.write(bytearray("\n".join(_staged_data_files(fs, staging)), "utf-8"))
-            out.close()
+            _stage_batch(fs, jvm, batch_df, staging_uri)
         rels = publish_staged_batch(spark, staging_uri, ws.data_dir)
         parts = sorted(
             {tuple(seg.split("=")[1] for seg in rel.split("/")[:-1]) for rel in rels}

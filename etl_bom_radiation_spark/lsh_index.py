@@ -141,14 +141,17 @@ _META = "meta.json"
 _KNOWN_CLEAN: set[str] = set()
 
 
-def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
-    """(band frame — cap-gated unless ``gate=False`` —, hashed-set frame)
-    for a (doc_id, text) frame — the exact n42/n49 stages (shared
-    helpers), one text pass.  ``update_lsh_index`` needs the UNGATED
-    band rows: its gate must see existing bucket occupancy, not just
-    the batch.  Hash-once (OPTIMIZATION r16, sketch_from_hashes
+def sketch_docs(docs: DataFrame):
+    """(UNGATED band frame, hashed-set frame) for a (doc_id, text, ...)
+    frame — the one tokens -> distinct 2-gram shingles -> hashed sets ->
+    16-min sketch -> 8x2 bands assembly, shared by n42, n49 and every
+    index call here, one text pass.  Callers gate: ``update_lsh_index``
+    must cap against the index's existing bucket occupancy, not the
+    batch alone.  Hash-once (OPTIMIZATION r16, sketch_from_hashes
     docstring): the hashed-set frame is built first and the sketch
-    explodes it — one polyhash per (doc, distinct shingle), not two."""
+    explodes it — one polyhash per (doc, distinct shingle), not two.
+    ``hashed_sets`` and ``band_frame`` are called through this module's
+    namespace, where traced runs wrap them."""
     toks = docs.select("doc_id", _tokens(F.col("text")).alias("ws"))
     # UNPINNED since OPTIMIZATION r17 (ADVICE r16): hsets is shs' only
     # consumer after the hash-once refactor, so the former checkpoint of
@@ -159,8 +162,6 @@ def _sketch_frames(spark: SparkSession, docs: DataFrame, gate: bool = True):
     bands = band_frame(
         sketch_from_hashes(hsets.select("doc_id", F.explode("hs").alias("x")))
     )
-    if gate:
-        bands = gate_buckets(bands)
     return bands, hsets
 
 
@@ -351,8 +352,8 @@ def build_lsh_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> Non
     membership) and ``hsets.parquet`` (hashed shingle sets) — plus the
     ``meta.json`` high-water mark ``update_lsh_index`` checks its
     append-only id precondition against."""
-    bands, hsets = _sketch_frames(spark, docs)
-    bands.write.mode("overwrite").parquet(f"{index_dir}/bands.parquet")
+    bands, hsets = sketch_docs(docs)
+    gate_buckets(bands).write.mode("overwrite").parquet(f"{index_dir}/bands.parquet")
     hsets.write.mode("overwrite").parquet(f"{index_dir}/hsets.parquet")
     # high-water mark from the ALREADY-MATERIALIZED hset frame — one row
     # per input doc (hashed_sets neither filters nor explodes), so
@@ -424,9 +425,9 @@ def probe_lsh_index(
     Reads are the COMMITTED snapshot (ids at or below the meta
     high-water mark): leftovers of a crashed ``update_lsh_index`` are
     invisible until :func:`vacuum_lsh_index` repairs them."""
-    inc_bands, inc_hsets = _sketch_frames(spark, batch)
+    inc_bands, inc_hsets = sketch_docs(batch)
     return _probe_frames(
-        spark, index_dir, batch.select("doc_id"), inc_bands, inc_hsets
+        spark, index_dir, batch.select("doc_id"), gate_buckets(inc_bands), inc_hsets
     )
 
 
@@ -464,7 +465,7 @@ def update_lsh_index(
     (``_committed``); run :func:`vacuum_lsh_index` before RETRYING the
     crashed batch, or the retry's append would double the uncommitted
     rows and the commit would expose both copies."""
-    new_bands, new_hsets = _sketch_frames(spark, kept_batch, gate=False)
+    new_bands, new_hsets = sketch_docs(kept_batch)
     return _fold_frames(
         spark, index_dir, kept_batch.select("doc_id"), new_bands, new_hsets
     )
@@ -721,14 +722,14 @@ def admit_batch(
         # term — update_lsh_index re-sketching the keepers from text
         # would double it).
         # OPTIMIZATION r16 (guide §1.2 driver fixed cost): no extra
-        # eager .localCheckpoint() layer here — _sketch_frames' band and
+        # eager .localCheckpoint() layer here — sketch_docs' band and
         # hset frames are already LAZILY checkpointed by band_frame /
         # hashed_sets, so their blocks materialize inside the first
         # consuming job (the verdicts materialization) and every later
         # consumer (the fold's joins) reads the same pinned blocks.  The
         # former eager re-checkpoints were two pure double-checkpoint
         # driver jobs per cycle.
-        bands_u, hsets_b = _sketch_frames(spark, batch, gate=False)
+        bands_u, hsets_b = sketch_docs(batch)
         verdicts = _probe_frames(
             spark,
             index_dir,

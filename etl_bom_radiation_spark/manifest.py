@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from .workspace import _fs
+
 #: manifest location inside a table dir (underscore = ignored by readers)
 MANIFEST_DIR = "_manifest"
 
@@ -54,12 +56,6 @@ def _stats_aggs(cols: list[str]):
     return aggs
 
 
-def _fs_for(spark: SparkSession, path: str):
-    from .workspace import _fs
-
-    return _fs(spark, path)
-
-
 def _swap_in(spark: SparkSession, tmp: str, out: str) -> None:
     """Replace *out* with *tmp* via the filesystem's rename — the manifest
     is re-written as a unit, never patched in place, so a concurrent
@@ -67,7 +63,7 @@ def _swap_in(spark: SparkSession, tmp: str, out: str) -> None:
     window is the delete+rename instant, not a full re-write (and a crash
     inside it leaves the complete new manifest at the tmp path, healed by
     the next refresh's fallback rebuild)."""
-    fs, out_p, jvm = _fs_for(spark, out)
+    fs, out_p, jvm = _fs(spark, out)
     tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
     # boolean checked (ADVICE r10 discipline): Hadoop delete also returns
     # false for a MISSING path (the first-ever build), which is not a
@@ -202,7 +198,7 @@ def pruned_read(
         )
     files = [r.file for r in man.filter(cond).select("file").collect()]
     if files:
-        fs, _, jvm = _fs_for(spark, files[0])
+        fs, _, jvm = _fs(spark, files[0])
         for f in files:
             if not fs.exists(jvm.org.apache.hadoop.fs.Path(f)):
                 raise FileNotFoundError(

@@ -8,13 +8,14 @@ contractually rows-only) and n36 verified the estimator identity; this
 closes the remaining gap — the banding/bucketing mechanics themselves —
 with the engine-neutral sketch both already share (one polyhash per
 distinct 2-gram shingle + 16 affine universal-hash permutations,
-``minhash_eval.sketch_signatures``).
+``minhash_eval.sketch_from_hashes``).
 
 Pipeline (each stage the shape it must have at 100 TB):
 
-* signatures: the shared n36 build — one interpreted string hash per
-  shingle, then broadcast-joined codegen affine permutations, min per
-  (doc, seed), map-side combined, 16 BIGINTs per doc;
+* signatures: the shared assembly ``lsh_index.sketch_docs`` — one
+  interpreted polyhash per distinct shingle (the hashed set the verify
+  stage reuses), then codegen affine permutations, min per (doc, seed),
+  map-side combined, 16 BIGINTs per doc;
 * bands: b=8 bands of r=2 rows; the band key concatenates the band's
   minima IN SEED ORDER (seed-parity conditional min — deterministic,
   no collect_list ordering hazard).  b/r set the collision curve
@@ -49,8 +50,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import load_tables, register
-from .llm_queries import _DUCK_TOKENS, _duck_polyhash, _polyhash, _shingles, _tokens
-from .minhash_eval import _DUCK_SH2, _duck_sig_cte, SEEDS, sketch_from_hashes
+from .llm_queries import _DUCK_TOKENS, _duck_polyhash, _polyhash
+from .minhash_eval import _DUCK_SH2, _duck_sig_cte, SEEDS
 
 #: DuckDB polyhash of the list_transform lambda variable `q`
 _DUCK_PH_Q = _duck_polyhash("q")
@@ -83,7 +84,8 @@ BUCKET_CAP = 64
 # The band-key construction, the BUCKET_CAP gate, and the hashed-set
 # build are parity-critical: n49's persisted-index layout must be
 # byte-identical to n42's pipeline on BOTH engines, so each exists
-# exactly once here (the SRC_FP_CTES discipline — code-review r8).
+# exactly once here (the SRC_FP_CTES discipline — code-review r8), and
+# one chain of them, ``lsh_index.sketch_docs``, builds every sketch.
 
 
 def band_frame(sig: DataFrame) -> DataFrame:
@@ -198,31 +200,18 @@ def n42_minhash_banded_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify with the ~0.35 banding threshold — every stage deterministic
     and hash-checked. AQE skew-join posture re-asserted for hot buckets
     (the n32 contract)."""
+    from ..lsh_index import sketch_docs  # in-body: lsh_index imports this module
+
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("ws"))
-    # UNPINNED since OPTIMIZATION r17 (ADVICE r16): after the hash-once
-    # refactor hsets is shs' ONLY consumer here, so checkpointing the
-    # distinct-shingle STRING arrays bought no reuse — the hsets pin
-    # below is the shared barrier (it feeds the sketch AND both verify
-    # sides); one fused projection per row, no intermediate block write
-    shs = toks.select("doc_id", F.array_distinct(_shingles("ws", 2)).alias("s"))
-    # hash-once (OPTIMIZATION r16, sketch_from_hashes docstring): the
-    # verify-stage hashed sets are built FIRST and the sketch explodes
-    # them, instead of polyhashing the exploded strings a second time —
-    # min per (doc, seed) is invariant under the distinct-collapse, so
-    # sig is bit-identical (oracle hash gate re-verified)
-    hsets = hashed_sets(shs)
-    sig = sketch_from_hashes(
-        hsets.select("doc_id", F.explode("hs").alias("x"))
-    )
-    # shared banding machinery (band_frame / gate_buckets docstrings) —
-    # one copy for n42's pipeline and n49's persisted-index layout.
+    # the shared sketch assembly — ONE hashed-set frame feeds the sketch
+    # and both verify sides
+    bands, hsets = sketch_docs(d)
     # PINNED (OPTIMIZATION r17, guide §1.2 step 1): the bucket self-join
     # consumes this frame on BOTH sides, and without the barrier the gate
     # window (Exchange + double Sort + WindowGroupLimit + Window) runs
     # once per side — 2x in the committed before-plan (plans/r17)
-    gated = gate_buckets(band_frame(sig)).localCheckpoint(eager=False)
+    gated = gate_buckets(bands).localCheckpoint(eager=False)
     a = gated.select(
         F.col("doc_id").alias("doc_a"),
         F.col("band").alias("band_a"),
@@ -248,7 +237,6 @@ def n42_minhash_banded_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -> ~1 s for the 97k-candidate verify at sf0.1). Both engines hash
     # with the same polyhash, so even a collision changes the result
     # identically on both sides (probability ~|union|^2/2p ~ 1e-6).
-    # (hsets built above — ONE hashed-set frame feeds sketch and verify)
     x = hsets.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("sx"))
     y = hsets.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("sy"))
     jac = F.size(F.array_intersect("sx", "sy")).cast("double") / F.size(

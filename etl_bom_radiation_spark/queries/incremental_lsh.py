@@ -39,9 +39,9 @@ its daily 0.1%):
 * Verify joins hashed BIGINT shingle sets back to only the candidate
   pairs — linear in candidates, the n42 contract.
 
-Every stage is deterministic integer arithmetic shared with n36/n42
-(``minhash_eval.sketch_signatures``), so decisions, candidate counts
-and best-Jaccard hash-match DuckDB exactly.
+Every stage is deterministic integer arithmetic shared with n42
+(``lsh_index.sketch_docs``), so decisions, candidate counts and
+best-Jaccard hash-match DuckDB exactly.
 
 Registered after ``heavy_hitters`` in ``queries.__init__._MODULES`` —
 new entries must not queue-jump the stalest-evidence queries at the
@@ -63,13 +63,11 @@ from .banded_lsh import (
     DUCK_BANDS_CTE,
     DUCK_HSETS_CTE,
     THRESHOLD,
-    band_frame,
     duck_gated_cte,
     gate_buckets,
-    hashed_sets,
 )
-from .llm_queries import _DUCK_TOKENS, _shingles, _tokens
-from .minhash_eval import _DUCK_SH2, _duck_sig_cte, sketch_from_hashes
+from .llm_queries import _DUCK_TOKENS
+from .minhash_eval import _DUCK_SH2, _duck_sig_cte
 
 #: which doc_ids form the "arriving" shard: doc_id % SHARD_MOD == SHARD_REM
 SHARD_MOD = 10
@@ -270,23 +268,13 @@ def n49_incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     an increment), dedup within the shard (min-id survivor), verify only
     candidates with exact hashed-set Jaccard. Per-doc keep/drop decision
     with candidate counts and best verified Jaccard."""
+    from ..lsh_index import sketch_docs  # in-body: lsh_index imports this module
+
     d = load_tables(spark, sf_dir, "documents")["documents"]
-    toks = d.select("doc_id", _tokens(F.col("text")).alias("ws"))
-    # ONE corpus scan: the checkpointed shingle frame feeds the sketch,
-    # both verify sides, and the incoming-doc spine (no second FileScan
-    # of documents for the final left join)
-    shs = toks.select(
-        "doc_id", F.array_distinct(_shingles("ws", 2)).alias("s")
-    ).localCheckpoint(eager=False)
-    # hash-once (OPTIMIZATION r16, sketch_from_hashes docstring): the
-    # hashed shingle sets are built FIRST and the sketch explodes them —
-    # one polyhash per (doc, distinct shingle) instead of two; sig is
-    # bit-identical (min invariant under the distinct-collapse)
-    hsets = hashed_sets(shs)
-    sig = sketch_from_hashes(
-        hsets.select("doc_id", F.explode("hs").alias("x"))
-    )
-    bands = band_frame(sig)
+    # ONE corpus scan: the pinned hashed-set frame (one row per doc) feeds
+    # the sketch, both verify sides, and the incoming-doc spine (no second
+    # FileScan of documents for the final left join)
+    bands, hsets = sketch_docs(d)
     # `%` (sign-of-dividend), NOT F.pmod: the oracle's `%` is DuckDB's
     # sign-of-dividend remainder, so pmod would route a negative doc_id
     # into the shard on Spark but onto the index side in the oracle — a
@@ -298,11 +286,10 @@ def n49_incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cap sees only the shard (shared gate_buckets — the n42 gate)
     idx_gated = gate_buckets(bands.filter(~is_inc))
     inc_gated = gate_buckets(bands.filter(is_inc))
-    # (hsets built above — ONE hashed-set frame feeds sketch and verify)
     return shard_verdicts(
         idx_gated,
         inc_gated,
         hsets,
         hsets.filter(is_inc),
-        shs.select("doc_id").filter(is_inc),
+        hsets.select("doc_id").filter(is_inc),
     )

@@ -97,24 +97,27 @@ def _duck_sig_cte() -> str:
 
 
 def sketch_from_hashes(based: DataFrame) -> DataFrame:
-    """MinHash signature frame from a PRE-HASHED (doc_id, x) frame — the
-    affine-permutation + min-aggregation half of :func:`sketch_signatures`
-    without the polyhash projection.
+    """MinHash signature frame (doc_id, seed, mn) from a PRE-HASHED
+    (doc_id, x) frame: the 16 affine permutations as codegen arithmetic
+    (BIGINT-safe: a, x < 2^31 so a*x+b < 2^63), min per (doc, seed).
 
-    OPTIMIZATION r16 (guide §1.2 step 2 — don't compute things twice):
-    the pipelines that build BOTH the sketch and the verify-stage hashed
-    shingle sets (n42, n49, lsh_index) were polyhashing every
-    (doc, shingle) pair twice — once exploded for the sketch, once inside
-    ``hashed_sets``'s transform.  Feeding the sketch from the EXPLODED
-    HASHED SET instead halves the dominant interpreted-HOF term and
-    explodes BIGINTs instead of strings (measured at sf0.1: the sketch's
-    hash pass 0.95 s -> 0.27 s as an explode of the pre-hashed array).
-    Values are bit-identical: ``hs`` is ``array_distinct`` of exactly the
-    hashes the old path computed per row, and a min-aggregate is
-    invariant under duplicate removal — a polyhash COLLISION between two
-    distinct shingles of one doc collapses to one row here where the old
-    frame carried two, but min() over the same value set is unchanged
-    (oracle hash gates re-verified for n42/n49)."""
+    All SEEDS minima are computed in ONE aggregation pass — 16 min
+    expressions over the hash frame, unpivoted to the (doc_id, seed, mn)
+    contract afterwards when the frame is already doc-sized.  The former
+    shape (broadcast seed table x crossJoin, then groupBy(doc, seed))
+    materialized a SEEDS-times-larger intermediate (64M rows at sf0.1)
+    and shuffled SEEDS rows per doc; min is order-independent, so the
+    values are bit-identical (measured sketch-stage numbers in DRIFT_r08).
+
+    n36 feeds it one polyhash per exploded shingle.
+    ``lsh_index.sketch_docs`` (n42, n49, the persisted index) feeds it
+    the EXPLODED HASHED SETS its verify stage needs anyway — hash-once
+    (OPTIMIZATION r16): one polyhash per (doc, distinct shingle) instead
+    of two, exploding BIGINTs instead of strings (measured at sf0.1: the
+    sketch's hash pass 0.95 s -> 0.27 s).  Values are bit-identical: a
+    polyhash COLLISION between two distinct shingles of one doc
+    collapses to one row there, but min() over the same value set is
+    unchanged (oracle hash gates re-verified for n42/n49)."""
     mins = based.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("x") + F.lit(b)) % _POLY_MOD).alias(f"m{i}")
@@ -127,27 +130,6 @@ def sketch_from_hashes(based: DataFrame) -> DataFrame:
     pairs = ", ".join(f"{i}, m{i}" for i in range(SEEDS))
     return mins.select(
         "doc_id", F.expr(f"stack({SEEDS}, {pairs}) AS (seed, mn)")
-    )
-
-
-def sketch_signatures(sh: DataFrame) -> DataFrame:
-    """MinHash signature frame from an exploded (doc_id, sh) shingle frame:
-    ONE engine-neutral polyhash per shingle, then the 16 affine
-    permutations as codegen arithmetic (BIGINT-safe: a, x < 2^31 so
-    a*x+b < 2^63), min per (doc, seed).
-
-    All SEEDS minima are computed in ONE aggregation pass — 16 min
-    expressions over the shingle frame, unpivoted to the (doc_id, seed,
-    mn) contract afterwards when the frame is already doc-sized.  The
-    previous shape (broadcast seed table x crossJoin, then
-    groupBy(doc, seed)) materialized a SEEDS-times-larger intermediate
-    (64M rows at sf0.1) and shuffled SEEDS rows per doc; this one keeps
-    the shingle frame at its own size, shuffles one 16-column partial
-    per doc per partition, and min is order-independent so the values
-    are bit-identical (n36/n42 oracle parity re-checked; measured
-    sketch-stage numbers in DRIFT_r08)."""
-    return sketch_from_hashes(
-        sh.select("doc_id", _polyhash(F.col("sh")).alias("x"))
     )
 
 
@@ -201,7 +183,9 @@ def n36_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy localCheckpoint (the n29/n30 lever): the signature frame feeds
     # BOTH pair branches — without the barrier the whole base-hash +
     # permutation + min-agg subtree (and its corpus scan) runs twice
-    sig = sketch_signatures(sh).localCheckpoint(eager=False)
+    sig = sketch_from_hashes(
+        sh.select("doc_id", _polyhash(F.col("sh")).alias("x"))
+    ).localCheckpoint(eager=False)
 
     a = sig.select(
         F.col("doc_id").alias("doc_a"), F.col("seed").alias("sa"), F.col("mn").alias("ma")

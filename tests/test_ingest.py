@@ -642,6 +642,46 @@ def test_staged_manifest_lists_partition_relative_paths(spark, ws, tmp_path):
     assert all(os.path.exists(os.path.join(staging_uri, r)) for r in rels)
 
 
+def test_stage_manifest_publish_failure_restages_on_replay(
+    spark, ws, tmp_path, monkeypatch
+):
+    """The stage manifest is the marker publish_staged_batch trusts as
+    'staged generation complete', so it may appear only through a
+    rename: a publish that fails (here the rename lies) must leave NO
+    manifest — never an empty or torn one, whose replay would publish
+    none or only some of the staged files, mark the batch committed and
+    delete the rest — and the replayed batch restages and publishes
+    every row exactly once."""
+    import glob
+
+    import etl_bom_radiation_spark.ingest as I
+    from tests.conftest import LyingFS
+
+    ckpt = str(tmp_path / "ckpt")
+    for f in GOOD_FILES:
+        shutil.copy(os.path.join(FIXTURES, f), os.path.join(ws.prefix("in"), f))
+    real_stage = I._stage_batch
+
+    def lying_stage(fs, jvm, batch_df, staging_uri):
+        monkeypatch.setattr(I, "_stage_batch", real_stage)  # lie once
+        lying = LyingFS(fs, fail_renames=1, path_match=I._STAGE_MANIFEST)
+        real_stage(lying, jvm, batch_df, staging_uri)
+
+    monkeypatch.setattr(I, "_stage_batch", lying_stage)
+    q = ingest_stream(spark, ws, checkpoint=ckpt)
+    with pytest.raises(Exception, match="could not publish manifest"):
+        q.awaitTermination(120)
+    staging = os.path.join(ckpt, "staging", "0")
+    assert glob.glob(os.path.join(staging, "year=*"))  # the staged files
+    assert not os.path.exists(os.path.join(staging, I._STAGE_MANIFEST))
+    assert not glob.glob(os.path.join(ws.data_dir, "**", "*.parquet"), recursive=True)
+
+    q = ingest_stream(spark, ws, checkpoint=ckpt)
+    q.awaitTermination(120)
+    assert spark.read.parquet(ws.data_dir).count() == 18
+    assert not os.path.exists(staging)
+
+
 def test_compact_partitions_crash_recovery(spark, tmp_path):
     """code-review r3: a crash between renaming the new generation in and
     deleting the old one must be repaired by the next compact run (via the

@@ -849,7 +849,7 @@ def test_incremental_lsh_index_never_shuffles(spark, oracle_sf_dir):
     # buckets and the enriched candidate frame broadcasts onto the index
     # hset table, so there is no SortMergeJoin/ShuffledHashJoin anywhere
     # and no nested loop; the corpus text is scanned exactly once (the
-    # checkpointed shingle frame feeds sketch, verify, and the spine)
+    # checkpointed hashed-set frame feeds sketch, verify, and the spine)
     p = _plan(spark, oracle_sf_dir, "n49_incremental_lsh_dedup")
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
     assert "CartesianProduct" not in p

@@ -343,10 +343,11 @@ def test_sessionization_matches_python_fold(spark, tmp_path_factory, data):
 
 def _py_minhash(shingles):
     """Reference MinHash model: min over shingles of each affine
-    permutation of the polyhash — the semantics sketch_signatures must
-    preserve under ANY physical shape (it was refactored from a
-    broadcast-seed crossJoin to a single 16-min-aggregate pass in r8;
-    this pins the values to an engine-independent fold)."""
+    permutation of the polyhash — the semantics the sketch must preserve
+    under ANY physical shape (it was refactored from a broadcast-seed
+    crossJoin to a single 16-min-aggregate pass in r8, and to hash-once
+    over the hashed sets in r16; this pins the values to an
+    engine-independent fold)."""
     from etl_bom_radiation_spark.queries.minhash_eval import AFFINE, _POLY_MOD
 
     xs = [_py_polyhash(s) for s in shingles]
@@ -377,17 +378,23 @@ def _py_minhash(shingles):
     )
 )
 def test_sketch_signatures_match_python_model(spark, docs):
-    from etl_bom_radiation_spark.queries.minhash_eval import (
-        SEEDS,
-        sketch_signatures,
+    """The sketch path ``lsh_index.sketch_docs`` runs — hashed sets
+    exploded into ``sketch_from_hashes`` — equals the Python model, and
+    so do the band keys ``band_frame`` builds from it: band b is
+    "{min of seed 2b}-{min of seed 2b+1}"."""
+    from etl_bom_radiation_spark.queries.banded_lsh import (
+        BANDS,
+        ROWS,
+        band_frame,
+        hashed_sets,
     )
+    from etl_bom_radiation_spark.queries.minhash_eval import SEEDS, sketch_from_hashes
 
-    rows = [(i, sh) for i, doc in enumerate(docs) for sh in doc]
-    sh_df = spark.createDataFrame(rows, "doc_id long, sh string")
-    got = {
-        (r["doc_id"], r["seed"]): r["mn"]
-        for r in sketch_signatures(sh_df).collect()
-    }
+    shs = spark.createDataFrame(list(enumerate(docs)), "doc_id long, s array<string>")
+    sig = sketch_from_hashes(
+        hashed_sets(shs).select("doc_id", F.explode("hs").alias("x"))
+    )
+    got = {(r["doc_id"], r["seed"]): r["mn"] for r in sig.collect()}
     want = {
         (i, seed): mn
         for i, doc in enumerate(docs)
@@ -395,3 +402,9 @@ def test_sketch_signatures_match_python_model(spark, docs):
     }
     assert got == want
     assert len(got) == len(docs) * SEEDS
+    bands = {(r["doc_id"], r["band"]): r["bk"] for r in band_frame(sig).collect()}
+    assert bands == {
+        (i, b): f"{want[i, ROWS * b]}-{want[i, ROWS * b + 1]}"
+        for i in range(len(docs))
+        for b in range(BANDS)
+    }
