@@ -416,11 +416,12 @@ def _finish_compaction(fs, jvm, part_dir, tmp) -> bool:
     # an empty or undercounted partition to a concurrent reader (the
     # transient state is both generations visible, i.e. the double-count
     # a crashed run already left; code-review r11 — the old delete-first
-    # replay opened a reader-visible undercount window).  Booleans checked (ADVICE r10 discipline): a
-    # silently-failed rename would strand a folded file for the
-    # recursive temp delete below to destroy (data loss); a
-    # silently-failed old delete leaves double-counted rows.  Raising
-    # keeps the manifest-marked temp, so the next run resumes again.
+    # replay opened a reader-visible undercount window).  Booleans
+    # checked (ADVICE r10 discipline): a silently-failed rename would
+    # strand a folded file for the recursive temp delete below to destroy
+    # (data loss); a silently-failed old delete leaves double-counted
+    # rows.  Raising keeps the manifest-marked temp, so the next run
+    # resumes again.
     for s in fs.listStatus(tmp):
         n = s.getPath().getName()
         if s.isFile() and not n.startswith(("_", ".")):
@@ -513,9 +514,10 @@ def compact_partitions(
     output only ever accretes).
 
     Partitions are independent, so their fold jobs run under a bounded
-    driver-side thread pool (``_COMPACT_CONCURRENCY`` concurrent Spark jobs —
-    the scheduler interleaves them across executor slots; VERDICT r3: the
-    serial loop was the bottleneck at a millions-of-partitions archive).
+    driver-side thread pool (``_COMPACT_CONCURRENCY`` concurrent Spark
+    jobs — the scheduler interleaves them across executor slots; VERDICT
+    r3: the serial loop was the bottleneck at a millions-of-partitions
+    archive).
     A partition that fails mid-swap doesn't strand the rest: every
     partition gets its attempt, then the first error is re-raised — its
     partition is repaired by recovery on the next run."""

@@ -141,7 +141,7 @@ _META = "meta.json"
 _KNOWN_CLEAN: set[str] = set()
 
 
-def sketch_docs(docs: DataFrame):
+def sketch_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(UNGATED band frame, hashed-set frame) for a (doc_id, text, ...)
     frame — the one tokens -> distinct 2-gram shingles -> hashed sets ->
     16-min sketch -> 8x2 bands assembly, shared by n42, n49 and every

@@ -99,25 +99,17 @@ def _duck_sig_cte() -> str:
 def sketch_from_hashes(based: DataFrame) -> DataFrame:
     """MinHash signature frame (doc_id, seed, mn) from a PRE-HASHED
     (doc_id, x) frame: the 16 affine permutations as codegen arithmetic
-    (BIGINT-safe: a, x < 2^31 so a*x+b < 2^63), min per (doc, seed).
+    (BIGINT-safe: a, x < 2^31 so a*x+b < 2^63), min per (doc, seed), all
+    SEEDS minima in ONE aggregation pass, unpivoted once the frame is
+    doc-sized — a seed crossJoin would shuffle SEEDS rows per doc (64M
+    rows at sf0.1; DRIFT_r08).
 
-    All SEEDS minima are computed in ONE aggregation pass — 16 min
-    expressions over the hash frame, unpivoted to the (doc_id, seed, mn)
-    contract afterwards when the frame is already doc-sized.  The former
-    shape (broadcast seed table x crossJoin, then groupBy(doc, seed))
-    materialized a SEEDS-times-larger intermediate (64M rows at sf0.1)
-    and shuffled SEEDS rows per doc; min is order-independent, so the
-    values are bit-identical (measured sketch-stage numbers in DRIFT_r08).
-
-    n36 feeds it one polyhash per exploded shingle.
+    n36 feeds it one polyhash per exploded shingle;
     ``lsh_index.sketch_docs`` (n42, n49, the persisted index) feeds it
-    the EXPLODED HASHED SETS its verify stage needs anyway — hash-once
-    (OPTIMIZATION r16): one polyhash per (doc, distinct shingle) instead
-    of two, exploding BIGINTs instead of strings (measured at sf0.1: the
-    sketch's hash pass 0.95 s -> 0.27 s).  Values are bit-identical: a
-    polyhash COLLISION between two distinct shingles of one doc
-    collapses to one row there, but min() over the same value set is
-    unchanged (oracle hash gates re-verified for n42/n49)."""
+    the exploded hashed sets its verify stage needs anyway — hash-once
+    (OPTIMIZATION r16: the sketch's hash pass 0.95 s -> 0.27 s at
+    sf0.1).  min() over a doc's distinct hashes equals min() over its
+    shingles' hashes, so both inputs give bit-identical values."""
     mins = based.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("x") + F.lit(b)) % _POLY_MOD).alias(f"m{i}")
